@@ -22,10 +22,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..encode import ENCODED_SCHEMA_DDL, encode_batch
 from ..session import DEFAULT_CHUNK_ROWS
+from ..verify import _pair_report
 
 
 def resolve_files(path: str, suffix: str = ".parquet"):
@@ -309,40 +310,17 @@ def token_hashes_from_encoded(encoded: DataFrame) -> DataFrame:
 
 
 def verify_hashes(left: DataFrame, right: DataFrame) -> dict:
-    """Distributed scalar-only round-trip verdict: full outer join on doc_id,
-    compare (n_tok, tok_hash). Row counts are compared explicitly — a side
-    with duplicated doc_ids joins every duplicate as 'ok', so without the
-    count check duplicate-row corruption is silent (the reference
-    parquet-diff fails on row-count mismatch, src/parquet-diff.cc:238-245).
+    """Distributed scalar-only round-trip verdict on two (doc_id, n_tok,
+    tok_hash) frames: one Spark action that runs each side's hash UDF
+    once, meets the rows in one exchange on doc_id and counts them in a
+    grouped pass (``verify._pair_counts``) — the counts a full outer join
+    on doc_id comparing (n_tok, tok_hash) null-safely would give,
+    duplicates included. Row counts are compared explicitly, like the
+    reference parquet-diff (src/parquet-diff.cc:238-245). A null doc_id
+    never matches: left rows count as 'missing', right rows as 'extra'.
     Returns {'equal', 'n_left', 'n_right', 'ok', 'missing', 'extra',
     'mismatch'}."""
-    l_, r_ = left.alias("l"), right.alias("r")
-    n_left, n_right = l_.count(), r_.count()
-    joined = l_.join(r_, F.col("l.doc_id") == F.col("r.doc_id"), "full_outer")
-    status = (
-        F.when(F.col("l.doc_id").isNull(), "extra")
-        .when(F.col("r.doc_id").isNull(), "missing")
-        .when(
-            ~(
-                F.col("l.n_tok").eqNullSafe(F.col("r.n_tok"))
-                & F.col("l.tok_hash").eqNullSafe(F.col("r.tok_hash"))
-            ),
-            "mismatch",
-        )
-        .otherwise("ok")
-    )
-    counts = {
-        row["status"]: row["count"]
-        for row in joined.select(status.alias("status")).groupBy("status").count().collect()
-    }
-    bad = {k: counts.get(k, 0) for k in ("missing", "extra", "mismatch")}
-    return {
-        "equal": not any(bad.values()) and n_left == n_right,
-        "n_left": n_left,
-        "n_right": n_right,
-        "ok": counts.get("ok", 0),
-        **bad,
-    }
+    return _pair_report(left, right, "doc_id", ("n_tok", "tok_hash"))
 
 
 def read_arrow_ipc(spark: SparkSession, path: str, ddl: str) -> DataFrame:

@@ -2966,6 +2966,17 @@ class TestDeletionVectors:
         assert got64 == b"\x01" + b"\x00" * 7 + b"\x00\x00\x00\x00" + want
         assert pf.read_roaring64(got64).tolist() == [1, 3]
 
+    def test_roaring32_accepts_any_iterable(self):
+        """The docstring promises any iterable: a generator serializes to
+        the same bytes as an equal ndarray (array and bitmap containers)."""
+        import numpy as np
+
+        from parquet_to_arrow_spark.sources import puffin as pf
+
+        vals = [3, 1, 70000, *range(131072, 131072 + 5000)]
+        want = pf._roaring32_bytes(np.asarray(vals, dtype=np.uint32))
+        assert pf._roaring32_bytes(v for v in vals) == want
+
     def test_roaring_container_edges(self):
         from parquet_to_arrow_spark.sources import puffin as pf
 

@@ -402,3 +402,54 @@ def test_balance_deciles_have_no_window_on_fact_path(spark):
         # no NTILE ranking function anywhere (percentile boundaries ARE fine)
         assert "ntile" not in plan.lower().replace("percentile", ""), plan
         assert "BroadcastHashJoin" in plan, plan
+
+
+def test_verify_is_one_shuffle_one_job_hashing_each_row_once(spark):
+    """The round-trip counter meets both sides in ONE hash exchange on
+    doc_id (no join, no second shuffle for the per-key aggregate), runs as
+    one Spark job, and pulls every row through its side's hash UDF once."""
+    import re
+
+    from parquet_to_arrow_spark.sources.io import HASH_SCHEMA_DDL, verify_hashes
+    from parquet_to_arrow_spark.verify import _pair_counts
+
+    sc = spark.sparkContext
+    hashed = sc.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            hashed.add(b.num_rows)
+            yield b
+
+    rows = [(f"d{i}", i % 7, i) for i in range(200)]
+    left, right = (
+        spark.createDataFrame(rows, HASH_SCHEMA_DDL).mapInArrow(counted, HASH_SCHEMA_DDL)
+        for _ in range(2)
+    )
+    counts = _pair_counts(left, right, "doc_id", ("n_tok", "tok_hash"))
+    plan = counts._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert "Join" not in plan, plan
+    # top-down: the final single-partition exchange, then the only shuffle
+    exchanges = re.findall(r"Exchange (SinglePartition|hashpartitioning\(\w+)", plan)
+    assert exchanges == ["SinglePartition", "hashpartitioning(doc_id"], plan
+
+    rep = verify_hashes(left, right)
+    assert rep["equal"] and rep["ok"] == len(rows)
+    assert hashed.value == 2 * len(rows)
+
+    # adaptive execution submits each shuffle map stage as a job of its
+    # own; without it a single action is exactly one job
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("verify-one-job", "verify_hashes job count")
+        rep = verify_hashes(left, right)
+        jobs = sc.statusTracker().getJobIdsForGroup("verify-one-job")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert rep["equal"] and len(jobs) == 1, jobs
+    assert hashed.value == 4 * len(rows)

@@ -19,7 +19,7 @@ from parquet_to_arrow_spark import checkpoint, manifest
 from parquet_to_arrow_spark.decode import decode_chunks_df
 from parquet_to_arrow_spark.encode import encode_tokens_df
 from parquet_to_arrow_spark.sources.synth import synth_tokens_df
-from parquet_to_arrow_spark.verify import assert_roundtrip, diff_report
+from parquet_to_arrow_spark.verify import TOKEN_COLUMNS, assert_roundtrip, diff_report
 
 N_ROWS = 4000
 
@@ -127,6 +127,104 @@ def test_verify_hashes_detects_duplicates(spark):
     bad = verify_hashes(left, dup)
     assert not bad["equal"]
     assert bad["n_left"] == 2 and bad["n_right"] == 3
+
+
+def _join_oracle(left, right, columns, key="doc_id"):
+    """Reference counts: a full outer join on the key, every pair compared
+    with eqNullSafe on ``columns``, plus explicit row counts. A null-key row
+    counts by its side (left 'missing', right 'extra'); otherwise this is
+    the join-based report the grouped counter replaced."""
+    l_ = left.withColumn("_side", F.lit(True)).alias("l")
+    r_ = right.withColumn("_side", F.lit(True)).alias("r")
+    joined = l_.join(r_, F.col(f"l.{key}") == F.col(f"r.{key}"), "full_outer")
+    match = F.lit(True)
+    for c in columns:
+        match = match & F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}"))
+    status = (
+        F.when(F.col("r._side").isNull(), "missing")
+        .when(F.col("l._side").isNull(), "extra")
+        .when(~match, "mismatch")
+        .otherwise("ok")
+    )
+    counts = {r["s"]: r["count"] for r in joined.groupBy(status.alias("s")).count().collect()}
+    bad = {k: counts.get(k, 0) for k in ("missing", "extra", "mismatch")}
+    n_left, n_right = left.count(), right.count()
+    return {
+        "equal": not any(bad.values()) and n_left == n_right,
+        "n_left": n_left,
+        "n_right": n_right,
+        "ok": counts.get("ok", 0),
+        **bad,
+    }
+
+
+# (left rows, right rows) of (doc_id, n_tok, tok_hash)
+PAIR_CASES = {
+    "equal": ([("a", 2, 11), ("b", 3, 22)], [("b", 3, 22), ("a", 2, 11)]),
+    "dup_one_side": ([("a", 2, 11), ("b", 3, 22)], [("a", 2, 11), ("a", 2, 11), ("b", 3, 22)]),
+    "dup_both_equal": ([("c", 1, 5)] * 2, [("c", 1, 5)] * 3),
+    # 2 x 2 pairs, one equal: ok 1, mismatch A*B-M = 3
+    "dup_both_differ": ([("d", 1, 5), ("d", 1, 6)], [("d", 1, 5), ("d", 1, 7)]),
+    "dup_both_mixed": ([("d", 1, 5), ("d", 1, 5), ("d", 1, 6)], [("d", 1, 5), ("d", 1, 6)]),
+    "missing_extra_mismatch": (
+        [("e", 1, 1), ("g", 2, 1), ("k", 1, 1)],
+        [("f", 1, 1), ("g", 2, 2), ("k", 1, 1)],
+    ),
+    "null_n_tok": ([("h", None, 9), ("i", None, 9)], [("h", None, 9), ("i", 3, 9)]),
+    "null_doc_id_left": ([(None, 1, 1), ("a", 1, 1)], [("a", 1, 1)]),
+    "null_doc_id_right": ([("a", 1, 1)], [("a", 1, 1), (None, 1, 1)]),
+    "null_doc_id_both": ([(None, 1, 1), (None, 1, 1)], [(None, 1, 1)]),
+    "empty_right": ([("a", 1, 1)], []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PAIR_CASES))
+def test_verify_hashes_matches_join_oracle(spark, case):
+    from parquet_to_arrow_spark.sources.io import HASH_SCHEMA_DDL, verify_hashes
+
+    left, right = (spark.createDataFrame(rows, HASH_SCHEMA_DDL) for rows in PAIR_CASES[case])
+    assert verify_hashes(left, right) == _join_oracle(left, right, ("n_tok", "tok_hash"))
+
+
+def test_verify_hashes_pair_counts(spark):
+    """Hand-computed counts for the duplicate and null-key cases."""
+    from parquet_to_arrow_spark.sources.io import HASH_SCHEMA_DDL, verify_hashes
+
+    def rep(case):
+        left, right = (spark.createDataFrame(rows, HASH_SCHEMA_DDL) for rows in PAIR_CASES[case])
+        r = verify_hashes(left, right)
+        return tuple(r[k] for k in ("ok", "missing", "extra", "mismatch"))
+
+    assert rep("dup_both_equal") == (6, 0, 0, 0)
+    assert rep("dup_both_differ") == (1, 0, 0, 3)
+    assert rep("dup_both_mixed") == (3, 0, 0, 3)
+    # a null key never matches and counts by its side
+    assert rep("null_doc_id_left") == (1, 1, 0, 0)
+    assert rep("null_doc_id_right") == (1, 0, 1, 0)
+    assert rep("null_doc_id_both") == (0, 2, 1, 0)
+
+
+def test_diff_report_matches_join_oracle_on_arrays(spark):
+    """The same counter groups on array and string columns: duplicates,
+    a changed token, a null-safe null token array and null keys."""
+    ddl = "doc_id string, tokens array<int>, n_tok int, source string"
+    left = spark.createDataFrame(
+        [("a", [1, 2], 2, "web"), ("a", [1, 2], 2, "web"), ("b", [3], 1, None),
+         ("c", None, 0, "x"), ("d", [5], 1, "x"), (None, [9], 1, "x")],
+        ddl,
+    )
+    right = spark.createDataFrame(
+        [("a", [1, 2], 2, "web"), ("a", [1, 3], 2, "web"), ("b", [3], 1, None),
+         ("c", None, 0, "x"), ("e", [5], 1, "x"), (None, [9], 1, "x")],
+        ddl,
+    )
+    rep = diff_report(left, right)
+    assert {k: v for k, v in rep.items() if k != "sample"} == _join_oracle(
+        left, right, TOKEN_COLUMNS
+    )
+    assert (rep["ok"], rep["missing"], rep["extra"], rep["mismatch"]) == (4, 2, 2, 2)
+    assert len(rep["sample"]) == 5
+    assert {s["status"] for s in rep["sample"]} <= {"missing", "extra", "mismatch"}
 
 
 def test_read_done_missing_path(spark, tmp_path):
